@@ -11,6 +11,10 @@ granularity swung the recorded suite total by 21% between rounds with
 zero code change, which is exactly the noise band medians kill. The
 JSON adds ``runs`` and ``spread_pct`` (max relative min→max spread of
 any per-run suite total) so the artifact carries its own error bar.
+
+Comparisons against the r01–r16 history must read
+``subtotal_headline22``: ``value`` sums all 29 rows (the 22 original
+headline queries plus the 7 heavy ``HEADLINE_EXT`` rows added in r16).
 """
 
 from __future__ import annotations
@@ -102,9 +106,12 @@ def main() -> None:
     # One untimed pass over the suite AT THE BENCH SF: the first pass
     # of an invocation otherwise reads the bench parquet with a cold
     # OS page cache, which showed up as a 13% swing between bench
-    # invocations on identical code. After this, every timed pass
-    # measures warm-cache steady-state engine time — the quantity that
-    # is comparable across rounds.
+    # invocations on identical code. It also fills the codegen class
+    # cache: a headline22 pass needs about 255 generated classes, which
+    # Spark's default 100-entry cache evicted, so before get_spark
+    # sized it to 1024 every timed pass recompiled all of them (1.4-1.9
+    # s per pass on 4 cores). Now a timed pass compiles nothing and
+    # measures warm-cache steady-state engine time.
     for name in HEADLINE:
         QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
             "noop"

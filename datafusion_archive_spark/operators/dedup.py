@@ -82,8 +82,9 @@ def ngram_jaccard_pairs(
     side_pred=None,
 ) -> DataFrame:
     """Exact pairwise Jaccard similarity over k-word shingle sets,
-    returning pairs ``(id_a < id_b, jaccard)`` with
-    ``jaccard >= threshold``.
+    returning pairs ``(id_a, id_b, jaccard)`` with
+    ``jaccard >= threshold``, oriented ``id_a < id_b`` when
+    ``side_pred is None`` (otherwise by side, see below).
 
     ``side_pred`` (round 16, ADVICE r15): an optional id-column
     predicate restricting WHICH pairs are enumerated — side a holds

@@ -6,8 +6,12 @@ instead. Local-mode defaults here are sized for the test container
 (local[N] threads, one JVM) but every setting is chosen to also hold on
 a real cluster: AQE on (runtime re-plan, skew-join splitting, partition
 coalescing), shuffle partitions ~ cores for local mode, UTC session
-timezone so results compare bit-stable against external oracles, and
-Arrow-batched Python interop for the few Pandas-UDF operators.
+timezone so results compare bit-stable against external oracles,
+Arrow-batched Python interop for the few Pandas-UDF operators, and a
+generated-class cache (``spark.sql.codegen.cache.maxEntries`` = 1024)
+large enough to hold the warm working set of whole-stage-codegen
+classes, so a repeated query shape is compiled once per JVM instead of
+once per pass.
 """
 
 from __future__ import annotations
@@ -68,6 +72,81 @@ def diagnose_heap_oom(exc: BaseException) -> str | None:
     return None
 
 
+#: Generated-class cache size (``spark.sql.codegen.cache.maxEntries``,
+#: Spark default 100, least-recently-used eviction). Measured on a
+#: 4-core local[4] session: one warm pass of the 22 bench headline
+#: queries needs about 255 distinct generated classes, so at 100
+#: entries every pass recompiled all of them (255-258 Janino compiles,
+#: 1.4-1.9 s of compile time per pass, on the blocking path of every
+#: query). The 7 heavy iterative queries added 232 more classes when
+#: run after the rest of the registry, so both working sets fit in 1024
+#: with about 2x headroom. Cost: a 342-query registry run compiled
+#: 4,345 classes and grew Metaspace by 132 MB (~30 KB per class), so
+#: 1024 cached classes hold about 30 MB.
+CODEGEN_CACHE_ENTRIES = 1024
+
+#: Settings that bind once per JVM, mapped to the value Spark uses
+#: when the key is absent from the SparkContext conf and to what a
+#: stale value costs. ``spark.driver.memory`` binds at JVM launch; the
+#: codegen cache is sized when ``CodeGenerator`` first initializes.
+#: getOrCreate on an existing session ignores both silently.
+_LAUNCH_BOUND = {
+    "spark.driver.memory": (
+        "1g",
+        "sf0.1-scale graph/iterative queries may OOM on a 1g heap "
+        "(set SPARK_GRAFT_DRIVER_MEMORY before first session creation)",
+    ),
+    "spark.sql.codegen.cache.maxEntries": (
+        "100",
+        "a generated-class cache smaller than the warm working set "
+        "recompiles every query shape on every pass",
+    ),
+}
+
+
+def stale_conf_warning(
+    effective: dict[str, str], requested: dict[str, str]
+) -> str | None:
+    """Return the warning text for every launch-bound setting whose
+    ``effective`` value (the SparkContext conf, keys absent when the
+    JVM runs Spark's default) differs from the ``requested`` one, or
+    None when all of them took effect."""
+    problems = []
+    for key, want in requested.items():
+        default, cost = _LAUNCH_BOUND[key]
+        have = effective.get(key, default)
+        if have != want:
+            problems.append(
+                f"get_spark requested {key}={want} but an existing "
+                f"session has {have}; {cost}"
+            )
+    if not problems:
+        return None
+    return (
+        "; ".join(problems)
+        + ". These settings bind only once per JVM: stop the stale "
+        "session before get_spark creates the first one."
+    )
+
+
+def codegen_stats(spark: SparkSession) -> dict[str, float]:
+    """Generated-code compilations since this JVM started:
+    ``{"compiles": count, "compile_ms": total Janino time}``, read from
+    Spark's ``CodegenMetrics`` compilation-time histogram. The total is
+    the histogram's (reservoir) mean times its count, so it is an
+    estimate; the count is exact. Diff two readings to attribute
+    compiles to the work between them."""
+    hist = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    count = int(hist.getCount())
+    return {
+        "compiles": count,
+        "compile_ms": float(hist.getSnapshot().getMean()) * count,
+    }
+
+
 def get_spark(
     app_name: str = "datafusion_archive_spark",
     master: str | None = None,
@@ -98,11 +177,18 @@ def get_spark(
     # irrelevant on a real cluster, where driver/executor memory comes
     # from the submit config, not this factory.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "8g")
+    # Bound once per JVM (see _LAUNCH_BOUND); extra_conf may override.
+    launch_conf = {
+        "spark.driver.memory": driver_mem,
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+    }
+    for k, v in (extra_conf or {}).items():
+        if k in launch_conf:
+            launch_conf[k] = str(v)
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.driver.memory", driver_mem)
         # AQE: runtime re-planning — coalesces tiny shuffle partitions,
         # splits skewed ones, converts sort-merge joins to broadcast when
         # runtime stats allow. Essential at 100 TB, harmless at sf0.001.
@@ -122,30 +208,22 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**launch_conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # spark.driver.memory only binds at JVM launch: if some earlier
-    # code already created a session (the 1g default), getOrCreate
-    # returns it and the OOM protection above silently does not apply
-    # (ADVICE r10). Make that visible instead of tribal. NB: read the
-    # SparkCONTEXT conf — getOrCreate copies builder options into the
-    # session conf map even when the JVM ignored them, so
-    # spark.conf.get would happily echo the requested value back.
-    effective = spark.sparkContext.getConf().get(
-        "spark.driver.memory", "1g"
+    # Launch-bound settings: if some earlier code already created a
+    # session, getOrCreate returns it and the settings above silently
+    # do not apply (ADVICE r10). Make that visible instead of tribal.
+    # NB: read the SparkCONTEXT conf — getOrCreate copies builder
+    # options into the session conf map even when the JVM ignored
+    # them, so spark.conf.get would happily echo the requested value
+    # back.
+    message = stale_conf_warning(
+        dict(spark.sparkContext.getConf().getAll()), launch_conf
     )
-    if effective != driver_mem:
+    if message:
         import warnings
 
-        warnings.warn(
-            f"get_spark requested spark.driver.memory={driver_mem} but "
-            f"an existing session has {effective}; sf0.1-scale "
-            "graph/iterative queries may OOM on a 1g heap (stop the "
-            "stale session or set SPARK_GRAFT_DRIVER_MEMORY before "
-            "first session creation)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+        warnings.warn(message, RuntimeWarning, stacklevel=2)
     spark.sparkContext.setLogLevel("WARN")
     return spark
