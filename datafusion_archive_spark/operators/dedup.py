@@ -596,18 +596,14 @@ def _rewrap_checkpoint(ck: DataFrame) -> DataFrame:
     comment: carried sizeInBytes compounds across self-join rounds
     until Catalyst's stats visitor dominates wall time). Uses the
     JVM-side internalCreateDataFrame so no row crosses the Python
-    boundary; falls back to the public createDataFrame(rdd) path if
-    the internal API is unavailable (e.g. Spark Connect)."""
-    try:
-        jdf = ck._jdf
-        jrdd = jdf.queryExecution().toRdd()
-        spark = ck.sparkSession
-        new_jdf = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jdf.schema(), False
-        )
-        return DataFrame(new_jdf, spark)
-    except Exception:  # pragma: no cover - connect-only path
-        return ck.sparkSession.createDataFrame(ck.rdd, schema=ck.schema)
+    boundary."""
+    jdf = ck._jdf
+    jrdd = jdf.queryExecution().toRdd()
+    spark = ck.sparkSession
+    new_jdf = spark._jsparkSession.internalCreateDataFrame(
+        jrdd, jdf.schema(), False
+    )
+    return DataFrame(new_jdf, spark)
 
 
 def connected_components(
@@ -773,24 +769,13 @@ def connected_components(
             # compounding capped the 240k-point probe even with one jump
             # per round). Re-wrapping the materialized InternalRow RDD in
             # a fresh relation resets the stats every round — JVM-side,
-            # no Python data movement; the public createDataFrame(rdd)
-            # fallback covers connect-style sessions without _jdf.
+            # no Python data movement.
             rewrapped = _rewrap_checkpoint(ck)
             # convergence straight off the checkpoint job's metrics
-            # (the _old column carried through the round). The
-            # fallback recomputes from the materialized checkpoint on
-            # sessions where CollectMetrics on a checkpoint action is
-            # unavailable (connect-style sessions).
-            try:
-                changed = obs.get["n_changed"]
-            except Exception:  # pragma: no cover - connect-only path
-                changed = (
-                    rewrapped.filter(
-                        F.col("component") != F.col("_old")
-                    )
-                    .limit(1)
-                    .count()
-                )
+            # (the _old column carried through the round): the eager
+            # checkpoint job's completion event fills the observation,
+            # so obs.get returns once the listener bus delivers it.
+            changed = obs.get["n_changed"]
             new_labels = rewrapped.select("node", "component")
             if labels_l is not labels_first:
                 labels_l.unpersist()
@@ -808,8 +793,7 @@ def connected_components(
                 break
         # hand the (materialized — rewrapped checkpoint) result back
         # to the caller's session before the scope drops its views;
-        # downstream consumers then execute under the caller's conf,
-        # exactly as the old loop_conf contract promised
+        # downstream consumers then execute under the caller's conf
         result = ls.handback(labels_l)
     edges.unpersist()
     labels.unpersist()

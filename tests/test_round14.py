@@ -235,22 +235,6 @@ def test_salt_count_shuffle_partitions_signal():
     assert SALT_MIN >= 8
 
 
-def test_salt_count_broken_session_falls_back():
-    from datafusion_archive_spark.operators.util import (
-        SALT_MAX,
-        SALT_MIN,
-        salt_count,
-    )
-
-    class _Broken:
-        @property
-        def sparkContext(self):
-            raise RuntimeError("connect-style session")
-
-    got = salt_count(_Broken(), 6)
-    assert SALT_MIN <= got <= SALT_MAX
-
-
 # ---------------------------------------------------------------- #
 # VERDICT r13 #2: loop_session — child-session loop isolation       #
 # ---------------------------------------------------------------- #
@@ -268,7 +252,7 @@ def _views(spark):
 
 def test_loop_session_parent_conf_never_narrowed(spark):
     """The structural TOCTOU fix: mid-scope, the CALLER's session conf
-    is byte-identical to its pre-scope state (under loop_conf it read
+    is byte-identical to its pre-scope state (only the child reads
     the narrowed width with AQE off), so a frame built before the
     loop and collected during it plans exactly as it would with no
     loop running."""
@@ -279,7 +263,7 @@ def test_loop_session_parent_conf_never_narrowed(spark):
         spark.conf.get("spark.sql.adaptive.enabled"),
     )
     with loop_session(spark, 1000) as ls:
-        assert ls._child is not None  # child route, not fallback
+        assert ls._child is not None
         assert (
             spark.conf.get("spark.sql.shuffle.partitions"),
             spark.conf.get("spark.sql.adaptive.enabled"),
@@ -334,8 +318,9 @@ def test_loop_session_drops_views_on_exit_and_error(spark):
 
 def test_loop_session_concurrent_scopes_do_not_serialize(spark):
     """Two threads' loops enter simultaneously — a shared barrier
-    inside both scopes releases only if neither blocks the other
-    (loop_conf serialized them on the session lock)."""
+    inside both scopes releases only if neither blocks the other:
+    each loop narrows its own child, so nothing is held on the
+    caller's session."""
     import threading
 
     from datafusion_archive_spark.operators.util import loop_session
@@ -358,31 +343,78 @@ def test_loop_session_concurrent_scopes_do_not_serialize(spark):
     assert errs == []
 
 
-def test_loop_session_fallback_uses_locked_loop_conf(spark):
-    """A session whose newSession() raises degrades to the loop_conf
-    path: parent conf narrowed during the scope (under the session
-    lock), restored after; handoff/handback are identity."""
+class _NoChild:
+    """A session object whose newSession() raises: no child route."""
+
+    def __init__(self, real):
+        self._real = real
+
+    def newSession(self):
+        raise RuntimeError("no child sessions here")
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+
+class _ConnectLike:
+    """Spark Connect's session surface: its JVM-backed attributes
+    raise PySparkAttributeError (an AttributeError) with
+    JVM_ATTRIBUTE_NOT_SUPPORTED, as pyspark.sql.connect.session does."""
+
+    _JVM_ONLY = ("_jsc", "_jsparkSession", "sparkContext", "newSession")
+
+    def __init__(self, real):
+        self._real = real
+
+    def __getattr__(self, name):
+        from pyspark.errors import PySparkAttributeError
+
+        if name in self._JVM_ONLY:
+            raise PySparkAttributeError(
+                errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+                messageParameters={"attr_name": name},
+            )
+        return getattr(self._real, name)
+
+
+@pytest.mark.parametrize(
+    "stand_in, error, match",
+    [
+        (_NoChild, RuntimeError, "no child sessions"),
+        (_ConnectLike, AttributeError, "JVM_ATTRIBUTE_NOT_SUPPORTED"),
+    ],
+    ids=["no_child", "connect_like"],
+)
+def test_loop_session_refuses_session_without_child_route(
+    spark, stand_in, error, match
+):
+    """A session without a child route makes the scope raise the
+    underlying error on entry — never a degrade to narrowing the
+    caller's conf: no RuntimeWarning, the caller's width and AQE are
+    untouched, no handoff view is left behind, and the scope stays
+    unentered."""
+    import warnings as _warnings
+
     from datafusion_archive_spark.operators.util import loop_session
 
-    class _NoChild:
-        def __init__(self, real):
-            self._real = real
+    def caller_conf():
+        return (
+            spark.conf.get("spark.sql.shuffle.partitions"),
+            spark.conf.get("spark.sql.adaptive.enabled"),
+        )
 
-        def newSession(self):
-            raise RuntimeError("no child sessions here")
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-    wrapper = _NoChild(spark)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    df = spark.range(10)
-    with loop_session(wrapper, 1000) as ls:
-        assert ls._child is None and ls._fallback is not None
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        assert ls.handoff(df) is df
-        assert ls.handback(df) is df
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    before = caller_conf()
+    ls = loop_session(stand_in(spark), 1000)
+    with _warnings.catch_warnings(record=True) as caught:
+        _warnings.simplefilter("always")
+        with pytest.raises(error, match=match):
+            with ls:
+                pass  # pragma: no cover - never entered
+    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
+    assert caller_conf() == before
+    assert _views(spark) == []
+    with pytest.raises(RuntimeError, match="state=new"):
+        ls.handoff(spark.range(5))
 
 
 def test_loop_session_handoff_outside_scope_raises(spark):
@@ -405,9 +437,8 @@ def test_loop_session_handoff_outside_scope_raises(spark):
 
 
 def test_loop_session_nested_scopes_same_thread(spark):
-    """Nested loops on one thread were a hard error under loop_conf
-    (shared session conf); with per-loop child sessions they are
-    independent and both compute correctly."""
+    """Nested loops on one thread each get their own child session,
+    so they are independent and both compute correctly."""
     from pyspark.sql import functions as F
 
     from datafusion_archive_spark.operators.util import loop_session
@@ -499,32 +530,6 @@ def test_loop_session_child_inherits_runtime_confs(spark):
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-
-
-def test_loop_session_fallback_warns(spark):
-    """Degrading to the caller-session loop_conf scope reverts every
-    isolation guarantee the docstrings promise — it must be loud
-    (RuntimeWarning), not silent (r14 review)."""
-    import warnings as _warnings
-
-    from datafusion_archive_spark.operators.util import loop_session
-
-    class _NoChild:
-        def __init__(self, real):
-            self._real = real
-
-        def newSession(self):
-            raise RuntimeError("no child sessions here")
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        with loop_session(_NoChild(spark), 1000) as ls:
-            assert ls._fallback is not None
-    msgs = [str(w.message) for w in caught if w.category is RuntimeWarning]
-    assert any("degrading to the locked loop_conf" in m for m in msgs)
 
 
 def test_sweep_scale_check_covers_small_log_and_plain_mode(tmp_path):
