@@ -345,6 +345,13 @@ def minhash_lsh_pairs(
     # num_hashes longs/doc ≈ 136 B — ~140 GB even for 10^9 docs,
     # spillable), so caching them is the intended scale design.
     sig = cached(minhash_signatures(df, text_col, id_col, num_hashes, k))
+    # Load the cache before the self-join is planned: over a lazy
+    # cache each join side is its own AQE cache stage, and the
+    # broadcast build side goes to whichever stage AQE sees finish
+    # first, so one query has two plans, each with its own generated
+    # code. Loaded, both sides carry the actual size from the start
+    # and the join plans the same way on every run.
+    sig.count()
 
     mh_cols = [f"mh_{i}" for i in range(num_hashes)]
     band_structs = []

@@ -7,6 +7,9 @@ reported.
    one pass needs, so every pass recompiled all of them. The first
    pass's compile count must stay below the configured cache size —
    if the working set outgrows the cache, this goes red.
+   ``dedup_minhash_lsh`` self-joins one cached frame; its cache is
+   loaded before the join is planned, so AQE cannot pick a different
+   broadcast build side (and new generated code) from run to run.
 2. ``get_spark`` names every launch-bound setting (JVM heap, codegen
    cache size) that an already-running session silently ignores.
 """
@@ -47,6 +50,25 @@ def test_warm_headline_rerun_compiles_nothing(spark, sf_dir):
         f"the warm rerun recompiled {second} generated classes (first "
         f"pass: {first}); the codegen cache no longer holds the "
         "working set or a query now generates per-invocation code"
+    )
+
+
+def test_minhash_self_join_reads_a_loaded_cache(spark, sf_dir):
+    """Both sides of the LSH self-join read one cached signature frame,
+    loaded before the join is planned. Over an unloaded cache each side
+    is its own AQE cache stage and the build side goes to whichever
+    stage finishes first, so a warm rerun can plan the join the other
+    way round and compile new classes."""
+    df = QUERIES["dedup_minhash_lsh"](spark, sf_dir)
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    cached = [
+        leaves.apply(i)
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "InMemoryRelation"
+    ]
+    assert len(cached) == 2  # one per join side
+    assert all(
+        rel.cacheBuilder().isCachedColumnBuffersLoaded() for rel in cached
     )
 
 
